@@ -64,6 +64,12 @@ def partition_type_full(kind_col: str = "table_kind") -> Column:
     return expr
 
 
+def unsupported(kind_col: str = "table_kind") -> Column:
+    """Classify-and-skip predicate: the mutation targets an unsupported
+    partition type (a NULL kind is capturable)."""
+    return F.coalesce(F.col(kind_col).isin(*UNSUPPORTED_KINDS.keys()), F.lit(False))
+
+
 def split_unsupported(df: DataFrame, kind_col: str = "table_kind"):
     """Classify-and-skip: returns ``(supported, skipped_counts)`` where
     ``supported`` excludes unsupported-partition mutations and
@@ -78,10 +84,9 @@ def split_unsupported(df: DataFrame, kind_col: str = "table_kind"):
             [], "partition_type string, n_skipped long"
         )
         return df, empty
-    is_unsup = F.col(kind_col).isin(*UNSUPPORTED_KINDS.keys())
-    supported = df.where(~F.coalesce(is_unsup, F.lit(False)))
+    supported = df.where(~unsupported(kind_col))
     skipped = (
-        df.where(is_unsup)
+        df.where(F.col(kind_col).isin(*UNSUPPORTED_KINDS.keys()))
         .groupBy(partition_type_full(kind_col).alias("partition_type"))
         .agg(F.count("*").alias("n_skipped"))
     )
@@ -316,6 +321,19 @@ def decode_payload_jvm(df: DataFrame) -> DataFrame:
         F.from_json(F.decode(F.col("payload"), "utf-8"), _PAYLOAD_JSON_SCHEMA,
                     {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}),
     ).drop("payload")
+
+
+def decode_table_payload(df: DataFrame, spec) -> DataFrame:
+    """Decode one table's serialized payload into typed cells (S5, per-table
+    schema from the SchemaHolder analog). JVM `from_json` — codegen path."""
+    return df.withColumn(
+        "cells",
+        F.from_json(
+            F.decode(F.col("payload"), "utf-8"),
+            spec.cells_type(),
+            {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"},
+        ),
+    ).drop("payload", "keyspace", "table")
 
 
 @pandas_udf(CELLS_TYPE)

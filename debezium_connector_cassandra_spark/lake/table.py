@@ -58,9 +58,16 @@ def _pa_schema(schema: T.StructType) -> pa.Schema:
     return pa.schema([(f.name, _PA_TYPES[f.dataType]) for f in schema.fields])
 
 
+def bucket_sql(key_col: str, n_buckets: int) -> str:
+    """SQL text of the pure bucket function — the one definition of the
+    hash; ``bucket_expr`` and SQL-string callers both derive from it."""
+    quoted = key_col.replace("`", "``")
+    return f"CAST(pmod(xxhash64(`{quoted}`), {int(n_buckets)}) AS INT)"
+
+
 def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
     """Pure bucket function — recomputable anywhere, never persisted."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    return F.expr(bucket_sql(key_col, n_buckets))
 
 
 class LakeTable:
@@ -109,6 +116,15 @@ class LakeTable:
     @classmethod
     def exists(cls, path: str) -> bool:
         return os.path.exists(os.path.join(path, "_current"))
+
+    @classmethod
+    def open_or_create(
+        cls, spark: SparkSession, path: str, schema: T.StructType, key_col: str, n_buckets: int
+    ) -> "LakeTable":
+        """The table at ``path``; created empty with this layout if absent."""
+        if cls.exists(path):
+            return cls(spark, path)
+        return cls.create(spark, path, schema, key_col, n_buckets)
 
     # -- manifest plumbing -------------------------------------------------
     def _write_manifest(self, manifest: dict) -> None:

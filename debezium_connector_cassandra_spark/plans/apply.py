@@ -129,10 +129,10 @@ def apply_batch(
     """Apply one decoded mutation batch to the target. Returns metrics.
 
     ``stats`` — optional precomputed ``{"n": total, "d": ..., "p": ...,
-    "r": ...}`` event counts (the runner folds them into its narrow
-    offsets/lineage pre-scan, so the batch is scanned exactly once at full
-    width — by the reduction). When absent, a single column-pruned counting
-    job computes them here.
+    "r": ...}`` event counts (every front-end folds them into the batch
+    core's narrow offsets/lineage pre-scan, streaming/batch_core.py, so the
+    batch is scanned exactly once at full width — by the reduction). When
+    absent, a single column-pruned counting job computes them here.
 
     Steps map to SURVEY operators: D3-D12 are upstream in decode ->
     R6 (reduce+merge) -> tombstone persistence (Cassandra gc_grace analog).
@@ -195,8 +195,8 @@ def apply_batch(
     # --- touched buckets -----------------------------------------------
     # Distinct (state bucket, tombstone-store bucket) pairs over every
     # conv_id the batch touches — upsert/delete keys AND partition/range
-    # tombstone targets are all just the batch's conv_ids. The runner
-    # folds the pairs into its narrow pre-scan (``stats["bucket_pairs"]``,
+    # tombstone targets are all just the batch's conv_ids. The front-ends
+    # fold the pairs into the core's pre-scan (``stats["bucket_pairs"]``,
     # a bounded collect_set) so the steady-state loop never runs a
     # discovery job; direct callers fall back to one column-pruned
     # map-side-combined distinct, bounded by the bucket-count product.
@@ -244,53 +244,50 @@ def apply_batch(
         )
 
     # --- kill + merge target (only touched buckets are read/rewritten)
-    try:
-        if target.state.is_empty():
-            merged = drop_invisible(batch_state)
-        else:
-            tgt = target.state.read(buckets=bucket_ids)
-            if new_tombs.partition is not None or new_tombs.range is not None:
-                # conv-grain kills for target keys absent from the batch
-                tgt = kill_state(tomb_wt_for_keys(tgt, pr_tombs, keys_unique=True))
-            merged = merge_states(tgt, batch_state)
+    if target.state.is_empty():
+        merged = drop_invisible(batch_state)
+    else:
+        tgt = target.state.read(buckets=bucket_ids)
+        if new_tombs.partition is not None or new_tombs.range is not None:
+            # conv-grain kills for target keys absent from the batch
+            tgt = kill_state(tomb_wt_for_keys(tgt, pr_tombs, keys_unique=True))
+        merged = merge_states(tgt, batch_state)
 
-        if bucket_ids:
-            new_version = target.state.overwrite_buckets(merged, bucket_ids)
-        else:
-            new_version = target.state.current_version()
-        _mark("merge+cow-write")
+    if bucket_ids:
+        new_version = target.state.overwrite_buckets(merged, bucket_ids)
+    else:
+        new_version = target.state.current_version()
+    _mark("merge+cow-write")
 
-        # --- persist new tombstones for future out-of-order batches -------
-        if n_tombs:
-            d_rows = (
-                reduced.where(F.col("_d_wt").isNotNull()).select(
-                    F.lit("d").alias("kind"),
-                    "conv_id",
-                    F.col("turn_idx").alias("lo"),
-                    F.col("turn_idx").alias("hi"),
-                    F.lit(True).alias("lo_incl"),
-                    F.lit(True).alias("hi_incl"),
-                    F.col("_d_wt").alias("wt"),
-                )
-                if kind_counts["d"]
-                else None
+    # --- persist new tombstones for future out-of-order batches -------
+    if n_tombs:
+        d_rows = (
+            reduced.where(F.col("_d_wt").isNotNull()).select(
+                F.lit("d").alias("kind"),
+                "conv_id",
+                F.col("turn_idx").alias("lo"),
+                F.col("turn_idx").alias("hi"),
+                F.lit(True).alias("lo_incl"),
+                F.lit(True).alias("hi_incl"),
+                F.col("_d_wt").alias("wt"),
             )
-            tomb_rows = tombstones_to_rows(new_tombs, extra=d_rows)
-            if n_tombs <= 20_000:
-                # driver-side flush, no Spark job (offset-flush analog)
-                target.tombstones.append_small([r.asDict() for r in tomb_rows.collect()])
-            else:
-                target.tombstones.append(tomb_rows)
-        _mark("tombstone-append")
+            if kind_counts["d"]
+            else None
+        )
+        tomb_rows = tombstones_to_rows(new_tombs, extra=d_rows)
+        if n_tombs <= 20_000:
+            # driver-side flush, no Spark job (offset-flush analog)
+            target.tombstones.append_small([r.asDict() for r in tomb_rows.collect()])
+        else:
+            target.tombstones.append(tomb_rows)
+    _mark("tombstone-append")
 
-        return {
-            "n_events": n_events,
-            "n_buckets_rewritten": len(bucket_ids),
-            "n_new_tombstones": n_tombs,
-            "state_version": new_version,
-        }
-    finally:
-        reduced.unpersist()
+    return {
+        "n_events": n_events,
+        "n_buckets_rewritten": len(bucket_ids),
+        "n_new_tombstones": n_tombs,
+        "state_version": new_version,
+    }
 
 
 def gc_tombstones(target: CdcTarget, writetime_horizon: int) -> dict:

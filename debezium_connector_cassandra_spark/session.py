@@ -39,10 +39,11 @@ def get_spark(
         # floor on scan parallelism: commit-log segment directories hold many
         # small parquet files (one per producer partition); the default
         # open-cost packing folds them into a handful of splits, serializing
-        # the map side. The floor tracks the session's core count (cluster
-        # deployments set SPARK_GRAFT_CPUS to the executor-core total), so it
-        # is scale-adaptive, not a local-mode constant. Large files are
-        # unaffected (maxPartitionBytes still caps split size).
+        # the map side. The floor is max(64, cores): it follows the core
+        # count above 64 (cluster deployments set SPARK_GRAFT_CPUS to the
+        # executor-core total) and never drops below 64 splits, so a small
+        # session still unpacks a many-small-file segment scan. Large files
+        # are unaffected (maxPartitionBytes still caps split size).
         .config("spark.sql.files.minPartitionNum", str(max(64, int(cpus))))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,26 +1,15 @@
 """The micro-batch driver loop — Spark lifecycle replacing SURVEY §3.1.
 
-One iteration:
-  read _offsets -> discover unprocessed (segment, position) ranges ->
-  scan log slice (partition-pruned, position-pushdown) -> decode/envelope ->
-  apply_batch (dedup -> LWW reduce -> tombstones -> COW merge) ->
-  append _offsets + _lineage + _metrics.
+One iteration: read _offsets -> discover unprocessed (segment, position)
+ranges -> scan the log slice (partition-pruned, position-pushdown) -> the
+shared batch core (``batch_core``: pre-scan, decode chain, apply_batch,
+offsets + lineage + _metrics rows). What this front-end owns: the
+done/open/reprocess lineage status, the offset filters below, the changes
+export, commit-log transfer and the tombstone-GC horizon.
 
-Exactly-once: state commit happens inside apply_batch BEFORE offsets are
-appended; a crash between the two replays the batch, which is a no-op
-because the merge is idempotent (strict writetime comparisons). This is the
-same at-least-once + idempotent-replay contract as the reference
-(FileOffsetWriter monotonic offsets + offset skip-check + reprocess bypass,
-R5/R8) — but here the *table state* is exactly-once by construction.
-
-Scan economy (the 100 TB shape): one batch touches the log exactly twice —
-a NARROW pre-scan (segment_id, log_partition, position, op — four small
-columns, column-pruned at the parquet reader) that yields the per-segment
-offsets/lineage stats AND the op-kind counts in a single job, then the one
-full-width pass inside apply_batch's reduction. No other job re-reads the
-batch. Bookkeeping state (done/open segments, offset watermarks) is cached
-on the runner instance — loaded once per runner lifetime, maintained
-in-memory afterwards (single-writer, like the reference's file-locked
+Bookkeeping state (done/open segments, offset watermarks) is cached on the
+runner instance — loaded once per runner lifetime, maintained in-memory
+afterwards (single-writer, like the reference's file-locked
 FileOffsetWriter) — so the steady-state loop runs zero bookkeeping-read jobs
 per batch.
 
@@ -48,22 +37,20 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..lake.table import LakeTable
-from ..model import GC_SCHEMA, LINEAGE_SCHEMA, METRICS_SCHEMA, OFFSETS_SCHEMA
-from ..plans.apply import CdcTarget, apply_batch, gc_tombstones
-from ..sources.generator import read_mutation_log
 from ..sources.log_scan import discover_segments
-from ..functions.decode import with_envelope
-
-_KINDS = ("d", "p", "r")
-
-
-def _prune_offsets(df):
-    """Offsets compaction transform: keep only the max (segment_id, position)
-    row per log_partition (snapshot sentinel partitions included — their
-    single row is their own max)."""
-    df = df.sort_values(["log_partition", "segment_id", "position", "updated_at"])
-    return df.groupby("log_partition", as_index=False).tail(1).reset_index(drop=True)
+from .batch_core import (
+    BatchCore,
+    advance_writetime,
+    append_bookkeeping,
+    append_metrics,
+    drain,
+    open_bookkeeping,
+    open_target,
+    prune_offsets as _prune_offsets,  # noqa: F401  (the single-table transform)
+    read_statuses,
+    read_watermarks,
+    sweep_tombstones,
+)
 
 
 class CdcRunner:
@@ -96,43 +83,25 @@ class CdcRunner:
         self.log_path = log_path
         self.target_path = target_path
         self.segments_per_batch = segments_per_batch
-        self.excluded_fields = excluded_fields
         self.schema_changes = list(schema_changes)
-        # logged-batch mode: the log carries atomic multi-change records
-        # (changes: array<...> at one offset — handleMutation:255-272);
-        # run_batch explodes them before classification
-        self.batch_mutations = batch_mutations
-        self.log_schema = self._resolve_log_schema(log_schema)
-        self.decode_binary = decode_binary
-        if payload_format not in ("json", "binary"):
-            raise ValueError(f"unknown payload_format {payload_format!r}")
-        self.payload_format = payload_format
+        self.core = BatchCore(
+            spark,
+            log_path,
+            log_schema=log_schema,
+            batch_mutations=batch_mutations,
+            payload_format=payload_format,
+            decode_payload=decode_binary,
+            pair_markers=unpaired_range_markers,
+            excluded_fields=excluded_fields,
+            validate_writetimes=validate_writetimes,
+            routing_mode=routing_mode,
+            n_queues=n_queues,
+        )
         self.export_changes = export_changes
         self.tombstones_on_delete = tombstones_on_delete
-        self.unpaired_range_markers = unpaired_range_markers
-        self.validate_writetimes = validate_writetimes
         # R7 post-process plug-in (CommitLogTransfer analog): archives/
         # deletes a segment AFTER its state commit, export, and lineage land
         self.commit_log_transfer = commit_log_transfer
-        # R1 routing-mode knob (EventOrderGuaranteeMode,
-        # CassandraConnectorConfig.java:246-288): None lets the apply's own
-        # key shuffle route; a mode co-locates each ordered queue in one
-        # shuffle partition before the apply (getPartitionQueueIndex analog)
-        if routing_mode is not None:
-            from ..operators.routing import ROUTING_MODES
-
-            if routing_mode not in ROUTING_MODES:
-                raise ValueError(
-                    f"unknown routing mode {routing_mode!r}; use one of {ROUTING_MODES}"
-                )
-        self.routing_mode = routing_mode
-        self.n_queues = n_queues
-        if export_changes:
-            from ..lake.changes import ChangesExport
-
-            self.changes = ChangesExport(spark, f"{target_path}/changes")
-        else:
-            self.changes = None
         # tracing SPI analog (TracingEmitter decorator, tracing.enabled=true):
         # spans decorate the EMISSION surface, so they require the export
         if tracing and not export_changes:
@@ -141,16 +110,13 @@ class CdcRunner:
                 "(TracingEmitter analog) and requires export_changes=True"
             )
         self.tracing = tracing
-        if tracing:
+        self.changes = self.traces = None
+        if export_changes:
             from ..lake.changes import ChangesExport
 
-            self.traces = ChangesExport(spark, f"{target_path}/traces")
-        else:
-            self.traces = None
-        if LakeTable.exists(f"{target_path}/state"):
-            self.target = CdcTarget.open(spark, target_path)
-        else:
-            self.target = CdcTarget.create(spark, target_path, n_buckets=n_buckets)
+            self.changes = ChangesExport(spark, f"{target_path}/changes")
+            if tracing:
+                self.traces = ChangesExport(spark, f"{target_path}/traces")
         # maintained downstream view (incremental view maintenance in the
         # ingest loop): a per-conversation transcript assembly kept exactly
         # up to date — after each state commit the buckets containing this
@@ -158,24 +124,9 @@ class CdcRunner:
         # Deterministic-from-state => idempotent under batch replay, and the
         # refresh lands BEFORE offsets (same crash-safety side as the state).
         self.maintain_assembly = maintain_assembly
-        if maintain_assembly:
-            from ..operators.transcript import ASSEMBLY_SCHEMA
-
-            apath = f"{target_path}/assembly"
-            if LakeTable.exists(apath):
-                self.assembly = LakeTable(spark, apath)
-            else:
-                # MUST share the state's actual bucket function: the refresh
-                # prunes the state read by the assembly's bucket ids
-                self.assembly = LakeTable.create(
-                    spark,
-                    apath,
-                    ASSEMBLY_SCHEMA,
-                    "conv_id",
-                    self.target.state.manifest()["n_buckets"],
-                )
-        else:
-            self.assembly = None
+        self.target, self.assembly = open_target(
+            spark, target_path, n_buckets, assembly=maintain_assembly
+        )
         # tombstone GC (Cassandra gc_grace analog): when set, run() purges
         # stored tombstones below (max applied writetime - gc_grace_us) every
         # gc_every_batches batches. Size the grace from the producer's
@@ -183,134 +134,36 @@ class CdcRunner:
         # sources.generator.writetime_inversion_window_us) — purging inside
         # that window could let a late out-of-order upsert beat a purged
         # delete, so the horizon must trail it.
-        if gc_grace_us is not None and gc_grace_us < 0:
-            raise ValueError("gc_grace_us must be >= 0")
         self.gc_grace_us = gc_grace_us
         self.gc_every_batches = max(int(gc_every_batches), 1)
         self._max_writetime: int | None = None
-        self.offsets = self._bookkeeping("_offsets", OFFSETS_SCHEMA)
-        self.lineage = self._bookkeeping("_lineage", LINEAGE_SCHEMA)
-        self.metrics = self._bookkeeping("_metrics", METRICS_SCHEMA)
-        self.gc_log = self._bookkeeping("_gc", GC_SCHEMA) if gc_grace_us is not None else None
-        # superseded offsets are dead weight — compaction keeps only the
-        # per-partition watermark (the reference's offset FILE likewise holds
-        # only current values, FileOffsetWriter.java:96-119)
-        self.offsets.compaction_transform = _prune_offsets
+        self.offsets, self.lineage, self.metrics, self.gc_log = open_bookkeeping(
+            spark, target_path, multi=False, gc_grace_us=gc_grace_us
+        )
         # single-writer in-memory bookkeeping caches (recovered from the
         # tables once, here; maintained incrementally afterwards)
-        self._watermarks = self._load_watermarks()
+        self._watermarks = read_watermarks(self.offsets, "log_partition")
         self._done, self._open, self._errored = self._load_lineage_status()
-        self._open_positions = self._load_open_positions()
-
-    def _bookkeeping(self, name: str, schema) -> LakeTable:
-        path = f"{self.target_path}/{name}"
-        if LakeTable.exists(path):
-            return LakeTable(self.spark, path)
-        return LakeTable.create(self.spark, path, schema, key_col=schema.fields[0].name, n_buckets=1)
-
-    def _resolve_log_schema(self, log_schema):
-        """D3 safety: the canonical read schema silently DROPS a ``table_kind``
-        column present on disk — counter/MV/SI mutations would then be applied
-        as normal rows, the opposite of the reference's unsupported-partition
-        guard (Cassandra4CommitLogReadHandlerImpl.java:102-168). Detect the
-        tagged-log case once per runner lifetime and auto-include the column
-        so classify-and-skip cannot be bypassed by a forgotten config."""
-        if log_schema is not None:
-            return log_schema
-        from pyspark.sql import types as T
-
-        from ..model import BATCH_LOG_SCHEMA, MUTATION_LOG_SCHEMA
-
-        base = BATCH_LOG_SCHEMA if self.batch_mutations else None
-        try:
-            on_disk = {f.name for f in self.spark.read.parquet(self.log_path).schema.fields}
-        except Exception as e:
-            # ONLY the log-not-written-yet case may fall back silently: a
-            # transient IO/permission error here would otherwise disable the
-            # table_kind auto-include guard this probe exists to enforce
-            from pyspark.errors import AnalysisException
-
-            msg = str(e)
-            if isinstance(e, AnalysisException) and (
-                "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-            ):
-                return base  # log not written yet — canonical schema
-            raise
-        if "table_kind" not in on_disk:
-            return base
-        import warnings
-
-        warnings.warn(
-            "mutation log carries a 'table_kind' column not in the configured "
-            "schema; auto-including it so unsupported-partition mutations are "
-            "classified and skipped (pass log_schema explicitly to override)",
-            stacklevel=3,
-        )
-        return T.StructType(
-            list((BATCH_LOG_SCHEMA if self.batch_mutations else MUTATION_LOG_SCHEMA).fields)
-            + [T.StructField("table_kind", T.StringType(), True)]
-        )
+        # for each open segment: log_partition -> max applied position
+        self._open_positions: dict[int, dict[int, int]] = {}
+        if self._open:
+            for (seg, lp), (_, pos) in read_watermarks(
+                self.offsets, "segment_id", "log_partition"
+            ).items():
+                if seg in self._open:
+                    self._open_positions.setdefault(seg, {})[lp] = pos
 
     # -- checkpoint state (recovered once per runner lifetime) ---------------
-    def _load_watermarks(self) -> dict[int, tuple[int, int]]:
-        if self.offsets.is_empty():
-            return {}
-        rows = (
-            self.offsets.read()
-            .groupBy("log_partition")
-            .agg(F.max(F.struct("segment_id", "position")).alias("w"))
-            .select("log_partition", "w.segment_id", "w.position")
-            .collect()
-        )
-        return {r["log_partition"]: (r["segment_id"], r["position"]) for r in rows}
-
     def _load_lineage_status(self) -> tuple[set[int], set[int], set[int]]:
         """(done, open, errored) segment sets. A segment is open while it has
         an 'open' row (position-limited tail) and no completing row yet;
         errored while it has an 'error' row and no completing row ('done' or
         a successful 'reprocess' both complete it)."""
-        if self.lineage.is_empty():
-            return set(), set(), set()
-        rows = (
-            self.lineage.read()
-            .groupBy("segment_id")
-            .agg(F.collect_set("status").alias("statuses"))
-            .collect()
-        )
-        done = {
-            r["segment_id"]
-            for r in rows
-            if "done" in r["statuses"] or "reprocess" in r["statuses"]
-        }
-        open_ = {
-            r["segment_id"]
-            for r in rows
-            if "open" in r["statuses"] and r["segment_id"] not in done
-        }
-        errored = {
-            r["segment_id"]
-            for r in rows
-            if "error" in r["statuses"] and r["segment_id"] not in done
-        }
+        statuses = read_statuses(self.lineage, "segment_id")
+        done = {s for s, st in statuses.items() if st & {"done", "reprocess"}}
+        open_ = {s for s, st in statuses.items() if "open" in st} - done
+        errored = {s for s, st in statuses.items() if "error" in st} - done
         return done, open_, errored
-
-    def _load_open_positions(self) -> dict[int, dict[int, int]]:
-        """For each open segment: log_partition -> max applied position."""
-        if not self._open or self.offsets.is_empty():
-            return {}
-        rows = (
-            self.offsets.read()
-            .where(F.col("segment_id").isin(*[int(s) for s in self._open]))
-            .groupBy("segment_id", "log_partition")
-            .agg(F.max("position").alias("pos"))
-            .collect()
-        )
-        out: dict[int, dict[int, int]] = {}
-        for r in rows:
-            out.setdefault(r["segment_id"], {})[r["log_partition"]] = r["pos"]
-        return out
 
     def checkpointed_offsets(self) -> dict[int, tuple[int, int]]:
         """log_partition -> (segment_id, position) high-watermark (R5)."""
@@ -326,15 +179,6 @@ class CdcRunner:
         """Segments quarantined by run(on_error='isolate') — replay them
         with reprocess() after fixing the data (R8)."""
         return set(self._errored)
-
-    def _decode_payload(self, log: DataFrame) -> DataFrame:
-        if self.payload_format == "binary":
-            from ..functions.binary_codec import decode_payload_binary
-
-            return decode_payload_binary(log)
-        from ..functions.decode import decode_payload_jvm
-
-        return decode_payload_jvm(log)
 
     # -- planning -----------------------------------------------------------
     def pending_segments(self) -> list[int]:
@@ -357,16 +201,13 @@ class CdcRunner:
         incremental-tail mode (S4): a later batch resumes past the
         checkpointed position."""
         t0 = time.time()
-        batch_id = int(t0 * 1000)
         if self.schema_changes:
             # R9: replay DDL onto the lake BEFORE applying batches that carry
             # the new shape (SchemaChangeListener scenario)
             from .schema_evolution import replay_schema_changes
 
             replay_schema_changes(self.target, self.schema_changes, max(segment_ids))
-        log = read_mutation_log(self.spark, self.log_path, schema=self.log_schema).where(
-            F.col("segment_id").isin(*[int(s) for s in segment_ids])
-        )
+        log = self.core.read(segment_ids)
         # resume-past-checkpoint filter, scoped to OPEN (partially applied)
         # segments only — see module docstring for why a global watermark
         # filter is unsafe
@@ -385,173 +226,22 @@ class CdcRunner:
             log = log.where(
                 (F.col("segment_id") < last) | (F.col("position") <= position_limit)
             )
-        if self.batch_mutations:
-            # explode BEFORE classification so every change of a batch shares
-            # its offset and (default) writetime; the offset checkpoint then
-            # advances atomically per batch (handleMutation:255-272)
-            from ..functions.decode import explode_batch_mutations
-
-            log = explode_batch_mutations(log)
-
-        # D3 full form: mutations against COUNTER / MATERIALIZED_VIEW /
-        # SECONDARY_INDEX tables are counted-and-skipped (PartitionType
-        # guard, Cassandra4CommitLogReadHandlerImpl.java:102-168). Skipped
-        # rows still advance offsets/lineage — the reference reads past them
-        # — so the pre-scan sees the full log and only the apply is filtered.
-        from ..functions.decode import UNSUPPORTED_KINDS
-
-        has_kind = "table_kind" in log.columns
-        is_unsup = (
-            F.coalesce(
-                F.col("table_kind").isin(*UNSUPPORTED_KINDS.keys()), F.lit(False)
-            )
-            if has_kind
-            else F.lit(False)
+        log = self.core.explode(log)
+        rows = self.core.prescan(log, self.target)
+        # lineage: per-segment completion (EOF/archive analog, R3/R7); a
+        # position-limited tail leaves the last segment un-finalized
+        open_segment = max(segment_ids) if position_limit is not None else None
+        stats, lineage_rows = self._apply(
+            log,
+            rows,
+            lambda seg: "reprocess" if reprocess else (
+                "open" if seg == open_segment else "done"
+            ),
+            segment_ids,
         )
-
-        # ONE narrow pre-scan job (5 pruned columns): per-segment offsets +
-        # lineage stats, the global op-kind counts apply_batch needs, AND
-        # the touched (state bucket, tombstone-store bucket) pairs — folded
-        # so the batch is scanned exactly once before the reduction. The
-        # collect_set is bounded by the bucket-count product per group
-        # (tombstone-store buckets derive from the state count), never by
-        # event count.
-        state_m = self.target.state.manifest()
-        store_m = self.target.tombstones.manifest()
-        bucket_pair = (
-            f"named_struct('sb', CAST(pmod(xxhash64({state_m['key_col']}), "
-            f"{state_m['n_buckets']}) AS INT), "
-            f"'tb', CAST(pmod(xxhash64({store_m['key_col']}), "
-            f"{store_m['n_buckets']}) AS INT))"
-        )
-        seg_rows = (
-            log.groupBy("segment_id", "log_partition")
-            .agg(
-                F.count("*").alias("n"),
-                F.max("position").alias("max_pos"),
-                F.max("writetime").alias("max_wt"),
-                F.sum(is_unsup.cast("long")).alias("n_unsup"),
-                *[
-                    F.sum(((F.col("op") == k) & ~is_unsup).cast("long")).alias(f"n_{k}")
-                    for k in _KINDS
-                ],
-                F.expr(f"collect_set({bucket_pair}) AS bucket_pairs"),
-            )
-            .collect()
-        )
-        n_decoded = sum(r["n"] for r in seg_rows)
-        # candidate applied-writetime high watermark — the tombstone-GC
-        # horizon input. Computed here from the pre-scan, but folded into
-        # self._max_writetime only AFTER apply_batch commits: advancing it
-        # first would let a gc() between a failed apply and its replay purge
-        # tombstones a never-applied event still needs to lose to
-        # (deleted-row resurrection).
-        batch_max_wt = max(
-            (r["max_wt"] for r in seg_rows if r["max_wt"] is not None),
-            default=None,
-        )
-        n_skipped = sum(r["n_unsup"] for r in seg_rows)
-        batch_stats = {"n": n_decoded - n_skipped}
-        batch_stats.update({k: sum(r[f"n_{k}"] for r in seg_rows) for k in _KINDS})
-        # touched-bucket superset (skipped-kind rows may add buckets; extra
-        # buckets only cost an idempotent rewrite, never correctness)
-        batch_stats["bucket_pairs"] = sorted(
-            {(p["sb"], p["tb"]) for r in seg_rows for p in r["bucket_pairs"]}
-        )
-        if has_kind:
-            log = log.where(~is_unsup).drop("table_kind")
-
-        if self.unpaired_range_markers:
-            # D9 full form: the log carries separate start/end bound markers;
-            # pair them (per conv, log order) before the apply sees them
-            from ..operators.tombstones import pair_range_markers
-
-            log = pair_range_markers(log)
-        if self.decode_binary:
-            # S5: the log carries serialized payload bytes (the commit-log
-            # fidelity mode) — decode into typed cells before applying.
-            # 'json' = from_json codegen twin; 'binary' = the real binary
-            # layout with the vectorized numpy decoder (binary_codec.py)
-            log = self._decode_payload(log)
-        if self.excluded_fields:
-            # D10 field-exclude rewrites cells; the full envelope (ts_ms,
-            # source, ...) is NOT built on the apply hot path — it exists for
-            # the export surface (with_envelope), the apply needs only cells
-            log = with_envelope(log, excluded_fields=self.excluded_fields).select(
-                *[c for c in log.columns]
-            )
-
-        if self.validate_writetimes:
-            from ..operators.lww import validate_unique_writetimes
-
-            validate_unique_writetimes(log)
-        if self.routing_mode is not None:
-            from ..operators.routing import route_df
-
-            log = route_df(log, self.routing_mode, self.n_queues).drop("queue")
-        stats = apply_batch(self.target, log, stats=batch_stats)
         # state committed — the batch's writetimes are now APPLIED and may
         # advance the GC horizon
-        if batch_max_wt is not None and (
-            self._max_writetime is None or batch_max_wt > self._max_writetime
-        ):
-            self._max_writetime = batch_max_wt
-        if self.assembly is not None:
-            self._refresh_assembly(log)
-
-        now_ms = int(time.time() * 1000)
-        # offsets: per log partition, the max (segment, position) this batch
-        # has durably applied (idx-watermark analog, S4)
-        best: dict[int, tuple[int, int]] = {}
-        for r in seg_rows:
-            cur = best.get(r["log_partition"])
-            cand = (r["segment_id"], r["max_pos"])
-            if cur is None or cand > cur:
-                best[r["log_partition"]] = cand
-        self.offsets.append_small(
-            [
-                {
-                    "log_partition": lp,
-                    "segment_id": seg,
-                    "position": pos,
-                    "updated_at": now_ms,
-                }
-                for lp, (seg, pos) in sorted(best.items())
-            ]
-        )
-        for lp, cand in best.items():
-            if self._watermarks.get(lp, (-2, -2)) < cand:
-                self._watermarks[lp] = cand
-
-        # lineage: per-segment completion (EOF/archive analog, R3/R7); a
-        # position-limited tail leaves the last segment un-finalized. Every
-        # batch segment gets a row EVEN IF it contributed zero events (an
-        # already-drained tail or an empty segment directory) — otherwise it
-        # would stay pending forever and run() would spin.
-        open_segment = max(segment_ids) if position_limit is not None else None
-        lineage_rows = [
-            {
-                "segment_id": r["segment_id"],
-                "log_partition": r["log_partition"],
-                "status": "reprocess" if reprocess else (
-                    "open" if r["segment_id"] == open_segment else "done"
-                ),
-                "n_events": r["n"],
-            }
-            for r in seg_rows
-        ]
-        seen_segs = {r["segment_id"] for r in seg_rows}
-        for seg in segment_ids:
-            if seg not in seen_segs and seg != open_segment:
-                lineage_rows.append(
-                    {
-                        "segment_id": int(seg),
-                        "log_partition": -1,
-                        "status": "reprocess" if reprocess else "done",
-                        "n_events": 0,
-                    }
-                )
-        self.lineage.append_small(lineage_rows)
+        self._max_writetime = advance_writetime(self._max_writetime, rows)
         if not reprocess:
             for row in lineage_rows:
                 seg = row["segment_id"]
@@ -563,7 +253,7 @@ class CdcRunner:
                     self._open.add(seg)
             if open_segment is not None:
                 lp_pos = self._open_positions.setdefault(open_segment, {})
-                for r in seg_rows:
+                for r in rows:
                     if r["segment_id"] == open_segment:
                         lp_pos[r["log_partition"]] = max(
                             lp_pos.get(r["log_partition"], -1), r["max_pos"]
@@ -581,31 +271,10 @@ class CdcRunner:
             if done_now:
                 from ..lake.changes import envelope_rows
 
-                full = read_mutation_log(
-                    self.spark, self.log_path, schema=self.log_schema
-                ).where(F.col("segment_id").isin(*[int(s) for s in done_now]))
-                if self.batch_mutations:
-                    from ..functions.decode import explode_batch_mutations
-
-                    full = explode_batch_mutations(full)
-                if "table_kind" in full.columns:
-                    # skipped partition types emit no change events either
-                    from ..functions.decode import split_unsupported
-
-                    full, _ = split_unsupported(full)
-                    full = full.drop("table_kind")
-                if self.unpaired_range_markers:
-                    # same D9 pairing the apply path ran — without it each
-                    # range delete would export as TWO unpaired 't' marker
-                    # rows instead of one paired event
-                    from ..operators.tombstones import pair_range_markers
-
-                    full = pair_range_markers(full)
-                if self.decode_binary:
-                    full = self._decode_payload(full)
+                full = self.core.explode(self.core.read(done_now))
                 env = envelope_rows(
-                    full,
-                    excluded_fields=self.excluded_fields,
+                    self.core.decode(full, for_export=True),
+                    excluded_fields=self.core.excluded_fields,
                     tombstones_on_delete=self.tombstones_on_delete,
                 )
                 self.changes.write_segments(env, done_now)
@@ -616,7 +285,7 @@ class CdcRunner:
                     from ..operators.tracing import trace_spans
 
                     self.traces.write_segments(
-                        trace_spans(env, read_ts_ms=now_ms), done_now
+                        trace_spans(env, read_ts_ms=int(time.time() * 1000)), done_now
                     )
 
         if self.commit_log_transfer is not None:
@@ -624,29 +293,30 @@ class CdcRunner:
                 if row["status"] in ("done", "reprocess"):
                     self.commit_log_transfer.on_success(row["segment_id"])
 
-        wall_ms = int((time.time() - t0) * 1000)
-        self.metrics.append_small(
-            [
-                {
-                    "batch_id": batch_id,
-                    "segment_lo": min(segment_ids),
-                    "segment_hi": max(segment_ids),
-                    "n_decoded": n_decoded,
-                    "n_deduped": stats["n_events"],
-                    "n_applied": stats["n_events"],
-                    "n_skipped": n_skipped,
-                    "wall_ms": wall_ms,
-                }
-            ]
-        )
+        metrics = append_metrics(self.metrics, t0, rows, stats["n_events"], segment_ids)
         return {
-            "batch_id": batch_id,
+            "batch_id": metrics["batch_id"],
             "segments": segment_ids,
-            "n_decoded": n_decoded,
-            "n_skipped": n_skipped,
-            "wall_ms": wall_ms,
+            "n_decoded": metrics["n_decoded"],
+            "n_skipped": metrics["n_skipped"],
+            "wall_ms": metrics["wall_ms"],
             **stats,
         }
+
+    def _apply(self, log, rows, status, segment_ids=(), defer_markers=None):
+        """Core apply, view refresh, then offsets + lineage rows with
+        ``status``; returns ``(apply metrics, lineage rows)``."""
+        stats, batch = self.core.apply(self.target, log, rows, defer_markers=defer_markers)
+        if self.assembly is not None:
+            # refresh the touched buckets BEFORE offsets, same crash-safety
+            # side as the state (idempotent recompute)
+            self._refresh_assembly(batch)
+        offsets, lineage = append_bookkeeping(self, rows, status, segment_ids)
+        for o in offsets:
+            cand = (o["segment_id"], o["position"])
+            if self._watermarks.get(o["log_partition"], (-2, -2)) < cand:
+                self._watermarks[o["log_partition"]] = cand
+        return stats, lineage
 
     # -- R10 metrics surface -------------------------------------------------
     def streaming_metrics(self) -> dict:
@@ -663,32 +333,28 @@ class CdcRunner:
             }
             for lp, (seg, pos) in sorted(self._watermarks.items())
         }
-        if self.metrics.is_empty():
-            totals = {"n_batches": 0, "n_processed": 0, "n_skipped": 0,
-                      "last_batch_wall_ms": None}
-        else:
-            row = (
-                self.metrics.read()
-                .agg(
-                    F.count("*").alias("n_batches"),
-                    F.sum("n_applied").alias("n_processed"),
-                    F.sum("n_skipped").alias("n_skipped"),
-                    F.max(F.struct("batch_id", "wall_ms")).alias("last"),
-                )
-                .collect()[0]
+        # an empty table aggregates to count 0 and NULL sums/max
+        row = (
+            self.metrics.read()
+            .agg(
+                F.count("*").alias("n_batches"),
+                F.sum("n_applied").alias("n_processed"),
+                F.sum("n_skipped").alias("n_skipped"),
+                F.max(F.struct("batch_id", "wall_ms")).alias("last"),
             )
-            totals = {
-                "n_batches": row["n_batches"],
-                "n_processed": row["n_processed"],
-                "n_skipped": row["n_skipped"],
-                "last_batch_wall_ms": row["last"]["wall_ms"],
-            }
-        if self.gc_log is not None and not self.gc_log.is_empty():
+            .collect()[0]
+        )
+        totals = {
+            "n_batches": row["n_batches"],
+            "n_processed": row["n_processed"] or 0,
+            "n_skipped": row["n_skipped"] or 0,
+            "last_batch_wall_ms": row["last"]["wall_ms"] if row["last"] else None,
+            "n_tombstones_purged": 0,
+        }
+        if self.gc_log is not None:
             totals["n_tombstones_purged"] = (
                 self.gc_log.read().agg(F.sum("n_purged")).collect()[0][0] or 0
             )
-        else:
-            totals["n_tombstones_purged"] = 0
         return {
             **totals,
             "n_segments_done": len(self._done),
@@ -699,12 +365,7 @@ class CdcRunner:
 
     # -- maintained downstream view (transcript assembly IVM) ----------------
     def _refresh_assembly(self, batch_log: DataFrame) -> None:
-        """Re-assemble exactly the state buckets this batch's conversations
-        hash into and COW-swap them (`LakeTable.overwrite_buckets`). The
-        assembly shares the state's bucket function, so the state read is
-        file-pruned to the touched buckets; whole-bucket recompute-from-
-        state makes the refresh idempotent AND makes deleted conversations
-        vanish (their bucket is rewritten without them)."""
+        """Maintained-view step (see operators.transcript.refresh_assembly)."""
         from ..operators.transcript import refresh_assembly
 
         refresh_assembly(self.assembly, self.target, batch_log)
@@ -736,46 +397,21 @@ class CdcRunner:
         if self._max_writetime is None:
             return {"n_purged": 0, "n_kept": 0, "horizon_wt": None}
         horizon = int(self._max_writetime) - int(self.gc_grace_us)
-        res = gc_tombstones(self.target, horizon)
-        self.gc_log.append_small(
-            [
-                {
-                    "batch_id": int(time.time() * 1000),
-                    "fqtn": "",
-                    "horizon_wt": horizon,
-                    "n_purged": res["n_purged"],
-                    "n_kept": res["n_kept"],
-                }
-            ]
-        )
+        res = sweep_tombstones(self.gc_log, {"": self.target}, horizon)[""]
         return {"n_purged": res["n_purged"], "n_kept": res["n_kept"], "horizon_wt": horizon}
 
     def _mark_error(self, segment_id: int) -> None:
         """Quarantine a failing segment (R3's archive-to-error-folder flow):
         an 'error' lineage row, exclusion from future planning, and the
         CommitLogTransfer.on_error move when a transfer is configured."""
-        self.lineage.append_small(
-            [
-                {
-                    "segment_id": int(segment_id),
-                    "log_partition": -1,
-                    "status": "error",
-                    "n_events": 0,
-                }
-            ]
-        )
+        append_bookkeeping(self, [], lambda seg: "error", [segment_id])
         self._errored.add(int(segment_id))
         if self.commit_log_transfer is not None:
             self.commit_log_transfer.on_error(segment_id)
 
     # -- the loop -----------------------------------------------------------
     def run(self, max_batches: int | None = None, on_error: str = "raise") -> list[dict]:
-        """Drain pending segments in segment order, segments_per_batch at a
-        time (Trigger.AvailableNow-style). With ``gc_grace_us`` set, stored
-        tombstones are GC'd every ``gc_every_batches`` batches, so the store
-        stays bounded over an arbitrarily long run.
-
-        ``on_error``: 'raise' propagates the first failure (default);
+        """Drain pending segments (``batch_core.drain``). ``on_error``: 'raise' propagates the first failure (default);
         'isolate' is the reference's error-folder flow (CommitLogProcessor's
         per-commit-log error handling): a failing batch is retried segment
         by segment to pin the fault, the failing segment(s) get an 'error'
@@ -786,30 +422,23 @@ class CdcRunner:
         segment's events."""
         if on_error not in ("raise", "isolate"):
             raise ValueError(f"unknown on_error mode {on_error!r}")
-        results = []
-        n = 0
-        while True:
-            pending = self.pending_segments()
-            if not pending or (max_batches is not None and n >= max_batches):
-                break
-            batch = pending[: self.segments_per_batch]
-            if on_error == "raise":
-                results.append(self.run_batch(batch))
-            else:
+        if on_error == "raise":
+            return drain(self, max_batches, lambda batch: [self.run_batch(batch)])
+        return drain(self, max_batches, self._run_isolated)
+
+    def _run_isolated(self, batch: list[int]) -> list[dict]:
+        try:
+            return [self.run_batch(batch)]
+        except Exception:
+            # isolate: one segment at a time; single-segment failures are the
+            # faulty ones
+            results = []
+            for seg in batch:
                 try:
-                    results.append(self.run_batch(batch))
+                    results.append(self.run_batch([seg]))
                 except Exception:
-                    # isolate: one segment at a time; single-segment failures
-                    # are the faulty ones
-                    for seg in batch:
-                        try:
-                            results.append(self.run_batch([seg]))
-                        except Exception:
-                            self._mark_error(seg)
-            n += 1
-            if self.gc_grace_us is not None and n % self.gc_every_batches == 0:
-                self.gc()
-        return results
+                    self._mark_error(seg)
+            return results
 
     def reprocess(self, segment_ids: list[int]) -> dict:
         """R8 error-segment reprocessing: replay named segments bypassing the

@@ -1,13 +1,14 @@
-"""Structured Streaming front-end: readStream over the commit-log directory,
-foreachBatch into the same apply path as the batch runner.
+"""Structured Streaming front-ends: readStream over the commit-log
+directory, each micro-batch through the shared batch core (``batch_core``)
+into the same apply path as the batch runners.
 
 This is the push-style dual of CdcRunner's pull loop — the closest Spark
 analog of the reference's directory watcher (S1: blocks on ENTRY_CREATE,
 AbstractDirectoryWatcher.java:24): Spark's file-stream source tracks newly
-appearing files under ``segment_id=N/`` partitions, and each micro-batch
-flows through ``apply_batch`` (idempotent, so Spark's at-least-once
-foreachBatch contract still yields exactly-once table state — the same
-argument as the batch runner's crash-replay story).
+appearing files under ``segment_id=N/`` partitions. apply_batch is
+idempotent, so Spark's at-least-once foreachBatch contract still yields
+exactly-once table state — the same argument as the batch runner's
+crash-replay story.
 
 Ordering caveat (why there is NO offset pre-filter here): the file source
 does not deliver files in (segment, position) order — with
@@ -20,7 +21,10 @@ recorded with status ``streamed`` — never ``done``, because a micro-batch
 cannot know whether it saw ALL of a segment's files. The batch front-end
 treats ``streamed`` segments as pending and re-applies them in full when
 the job switches front-ends (a bounded, idempotent re-read — the price of
-the file source's unordered delivery).
+the file source's unordered delivery). For the same reason a stream never
+advances the tombstone-GC horizon and refuses the options that need whole
+segments (changes export, tracing, commit-log transfer, table DDL), and it
+refuses schema_changes because its read schema is fixed at query start.
 
 Use ``Trigger.AvailableNow`` (``available_now=True``) to drain everything
 present and stop — the streaming equivalent of ``CdcRunner.run()``; omit it
@@ -36,6 +40,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from ..lake.table import LakeTable
 from ..model import MUTATION_LOG_SCHEMA
 from ..plans.apply import apply_batch
+from .batch_core import append_metrics
 from .runner import CdcRunner
 
 # Persistent range-marker context (the RangeTombstoneContext.java:20-40
@@ -57,7 +62,65 @@ RANGE_CTX_SCHEMA = T.StructType(
 )
 
 
-class CdcStream:
+class StreamFrontEnd:
+    """readStream over a runner's log directory; each micro-batch goes
+    through the core's explode and pre-scan, the subclass's ``_apply`` (its
+    targets and ``streamed`` bookkeeping), and one ``_metrics`` row."""
+
+    # runner options that need whole segments in log order — refused, not
+    # silently ignored
+    REFUSED = ("export_changes",)
+
+    def __init__(self, runner, max_files_per_trigger: int | None = None):
+        for option in self.REFUSED:
+            if getattr(runner, option):
+                raise ValueError(
+                    f"{option} needs whole segments in log order, which a "
+                    "streaming micro-batch never sees; use the batch runner"
+                )
+        self.runner = runner
+        self.max_files_per_trigger = max_files_per_trigger
+
+    def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # Every delivered row is applied — no watermark pre-filter (see the
+        # module docstring). Spark replays a failed micro-batch
+        # (at-least-once); apply_batch keeps the table state exactly-once.
+        t0 = time.time()
+        batch_df = self.runner.core.explode(batch_df)
+        rows = self.runner.core.prescan(batch_df, self._targets())
+        if rows:
+            append_metrics(self.runner.metrics, t0, rows, self._apply(batch_df, rows))
+
+    def _targets(self):
+        return self.runner.target
+
+    def start(self, checkpoint_dir: str, available_now: bool = True):
+        reader = self.runner.spark.readStream.schema(self.runner.core.stream_schema())
+        if self.max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
+        writer = (
+            reader.parquet(self.runner.log_path)
+            .writeStream.foreachBatch(self._handle_batch)
+            .option("checkpointLocation", checkpoint_dir)
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
+    def run_available(self, checkpoint_dir: str, timeout_sec: int = 600) -> None:
+        """Drain all currently-available segments and stop (the streaming
+        twin of the runner's ``run()``)."""
+        q = self.start(checkpoint_dir, available_now=True)
+        q.awaitTermination(timeout_sec)
+        if q.isActive:
+            q.stop()
+
+
+class CdcStream(StreamFrontEnd):
+    # schema_changes replays DDL by segment, but a stream's read schema is
+    # fixed when the query starts
+    REFUSED = ("export_changes", "tracing", "commit_log_transfer", "schema_changes")
+
     def __init__(
         self,
         runner: CdcRunner,
@@ -72,8 +135,7 @@ class CdcStream:
         most this many segments (the file-delivery analog of an event-time
         watermark bound); an availableNow drain still finalizes everything
         at the end regardless."""
-        self.runner = runner
-        self.max_files_per_trigger = max_files_per_trigger
+        super().__init__(runner, max_files_per_trigger)
         self.settle_lag_segments = settle_lag_segments
         self._max_segment_seen: int | None = None
         # D9 streaming form: markers are deferred into a durable context and
@@ -81,144 +143,53 @@ class CdcStream:
         # mis-pair whenever the file source splits a conversation's markers
         # across batches in arbitrary order (see that method's docstring)
         self._range_ctx: LakeTable | None = None
-        if settle_lag_segments is not None and not getattr(
-            runner, "unpaired_range_markers", False
-        ):
+        if settle_lag_segments is not None and not runner.core.pair_markers:
             raise ValueError("settle_lag_segments requires unpaired_range_markers=True")
-        if getattr(runner, "unpaired_range_markers", False):
-            path = f"{runner.target_path}/_range_ctx"
-            self._range_ctx = (
-                LakeTable(runner.spark, path)
-                if LakeTable.exists(path)
-                else LakeTable.create(
-                    runner.spark, path, RANGE_CTX_SCHEMA, key_col="conv_id", n_buckets=1
-                )
+        if runner.core.pair_markers:
+            self._range_ctx = LakeTable.open_or_create(
+                runner.spark, f"{runner.target_path}/_range_ctx", RANGE_CTX_SCHEMA, "conv_id", 1
             )
 
-    def _source(self) -> DataFrame:
-        # mirror the runner's log configuration: an explicitly configured
-        # schema, or one inferred from the on-disk log (readStream requires
-        # a schema up front), falling back to the canonical log shape
-        schema = self.runner.log_schema
-        if schema == "infer":
-            schema = self.runner.spark.read.parquet(self.runner.log_path).schema
-        elif schema is None:
-            schema = MUTATION_LOG_SCHEMA
-        reader = self.runner.spark.readStream.schema(schema)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        df = reader.parquet(self.runner.log_path)
-        if getattr(self.runner, "batch_mutations", False):
-            return df  # cells travel inside the changes array
-        if "cells" not in df.columns and not self.runner.decode_binary:
-            raise ValueError(
-                "streaming source schema has no 'cells' column and decode_binary "
-                "is off — a mis-schema'd read would materialize empty state"
-            )
-        return df
-
-    def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # Every delivered row is applied — no watermark pre-filter (see
-        # module docstring: filtering against out-of-order file delivery
-        # loses data; re-applying is a harmless idempotent no-op). Spark
-        # replays a failed micro-batch (at-least-once); apply_batch keeps
-        # the table state exactly-once.
-        # offsets/lineage stats over the RAW batch (skipped unsupported rows
-        # still advance offsets, matching the batch front-end's pre-scan)
-        if getattr(self.runner, "batch_mutations", False):
-            # logged batches explode before everything else, exactly like the
-            # batch front-end (shared offset per batch — handleMutation:255-272)
-            from ..functions.decode import explode_batch_mutations
-
-            batch_df = explode_batch_mutations(batch_df)
-        seg_rows = (
-            batch_df.groupBy("segment_id", "log_partition")
-            .agg(F.count("*").alias("n"), F.max("position").alias("max_pos"))
-            .collect()
-        )
-        if not seg_rows:
-            return
-        if "table_kind" in batch_df.columns:
-            # D3 classify-and-skip, same as the batch front-end
-            from ..functions.decode import split_unsupported
-
-            supported, _ = split_unsupported(batch_df)
-            batch_df = supported.drop("table_kind")
+    def _apply(self, batch_df: DataFrame, rows: list[dict]) -> int:
+        defer = None
         if self._range_ctx is not None:
-            # defer every bound marker into the durable context (pairing is
-            # NOT safe inside a micro-batch); the rest of the batch applies
-            # now. Context lands BEFORE the apply — a crash-replayed batch
-            # just appends duplicates, which finalize_ranges dedupes.
-            markers = batch_df.where(F.col("op") == "r")
-            self._range_ctx.append(
-                markers.select(
-                    "conv_id",
-                    "segment_id",
-                    "position",
-                    "log_partition",
-                    "writetime",
-                    F.col("range_start").isNotNull().alias("is_start"),
-                    F.coalesce(
-                        F.col("range_start.method"), F.col("range_end.method")
-                    ).alias("method"),
-                    F.coalesce(
-                        F.col("range_start.turn_idx"), F.col("range_end.turn_idx")
-                    ).alias("turn_idx"),
-                    "schema_version",
-                )
-            )
-            batch_df = batch_df.where(F.col("op") != "r")
-            for r in seg_rows:
-                if self._max_segment_seen is None or r["segment_id"] > self._max_segment_seen:
-                    self._max_segment_seen = r["segment_id"]
-            if self.settle_lag_segments is not None and self._max_segment_seen is not None:
-                # continuous-mode watermark: markers whose segment can no
-                # longer receive out-of-order siblings pair and apply now
-                self.finalize_ranges(
-                    settle_below=int(self._max_segment_seen) - int(self.settle_lag_segments)
-                )
-        if self.runner.decode_binary:
-            # same codec selection as the batch front-end (json | binary)
-            batch_df = self.runner._decode_payload(batch_df)
-        if self.runner.excluded_fields:
-            from ..functions.decode import with_envelope
-
-            batch_df = with_envelope(
-                batch_df, excluded_fields=self.runner.excluded_fields
-            ).select(*[c for c in batch_df.columns])
-        apply_batch(self.runner.target, batch_df)
-        if self.runner.assembly is not None:
-            # maintained view: refresh the touched buckets BEFORE offsets,
-            # same crash-safety side as the state (idempotent recompute)
-            self.runner._refresh_assembly(batch_df)
-        now_ms = int(time.time() * 1000)
-        best: dict[int, tuple[int, int]] = {}
-        for r in seg_rows:
-            cand = (r["segment_id"], r["max_pos"])
-            if best.get(r["log_partition"], (-2, -2)) < cand:
-                best[r["log_partition"]] = cand
-        self.runner.offsets.append_small(
-            [
-                {"log_partition": lp, "segment_id": s, "position": p, "updated_at": now_ms}
-                for lp, (s, p) in sorted(best.items())
-            ]
-        )
-        for lp, cand in best.items():
-            if self.runner._watermarks.get(lp, (-2, -2)) < cand:
-                self.runner._watermarks[lp] = cand
+            seen = max(row["segment_id"] for row in rows)
+            if self._max_segment_seen is None or seen > self._max_segment_seen:
+                self._max_segment_seen = seen
+            defer = self._defer_markers
         # 'streamed', never 'done': a micro-batch sees an arbitrary file
         # subset, so segment completeness is unknowable here
-        self.runner.lineage.append_small(
-            [
-                {
-                    "segment_id": r["segment_id"],
-                    "log_partition": r["log_partition"],
-                    "status": "streamed",
-                    "n_events": r["n"],
-                }
-                for r in seg_rows
-            ]
+        stats, _ = self.runner._apply(batch_df, rows, lambda seg: "streamed", defer_markers=defer)
+        return stats["n_events"]
+
+    def _defer_markers(self, markers: DataFrame) -> None:
+        """Defer every bound marker into the durable context (pairing is NOT
+        safe inside a micro-batch). The context lands BEFORE the apply — a
+        crash-replayed batch just appends duplicates, which finalize_ranges
+        dedupes."""
+        self._range_ctx.append(
+            markers.select(
+                "conv_id",
+                "segment_id",
+                "position",
+                "log_partition",
+                "writetime",
+                F.col("range_start").isNotNull().alias("is_start"),
+                F.coalesce(
+                    F.col("range_start.method"), F.col("range_end.method")
+                ).alias("method"),
+                F.coalesce(
+                    F.col("range_start.turn_idx"), F.col("range_end.turn_idx")
+                ).alias("turn_idx"),
+                "schema_version",
+            )
         )
+        if self.settle_lag_segments is not None:
+            # continuous-mode watermark: markers whose segment can no
+            # longer receive out-of-order siblings pair and apply now
+            self.finalize_ranges(
+                settle_below=int(self._max_segment_seen) - int(self.settle_lag_segments)
+            )
 
     def finalize_ranges(self, settle_below: int | None = None) -> dict:
         """Pair the accumulated bound markers and apply the reconstructed
@@ -281,7 +252,7 @@ class CdcStream:
         )
         m = m.cache()
         try:
-            schema = self.runner.log_schema
+            schema = self.runner.core.log_schema
             if not (
                 isinstance(schema, T.StructType) and "cells" in schema.fieldNames()
             ):
@@ -327,23 +298,10 @@ class CdcStream:
             m.unpersist()
         return {"n_paired": n_paired, "n_dangling": n_dangling}
 
-    def start(self, checkpoint_dir: str, available_now: bool = True):
-        writer = (
-            self._source()
-            .writeStream.foreachBatch(self._handle_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
     def run_available(self, checkpoint_dir: str, timeout_sec: int = 600) -> None:
-        """Drain all currently-available segments and stop (the streaming
-        twin of CdcRunner.run()). With unpaired_range_markers, the drained
-        context is complete, so the deferred markers pair and apply here."""
-        q = self.start(checkpoint_dir, available_now=True)
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
+        """Drain all currently-available segments and stop. With
+        unpaired_range_markers, the drained context is complete, so the
+        deferred markers pair and apply here."""
+        super().run_available(checkpoint_dir, timeout_sec)
         if self._range_ctx is not None:
             self.finalize_ranges()

@@ -11,7 +11,16 @@ from debezium_connector_cassandra_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="cdc-tests", master="local[8]", shuffle_partitions=8)
+    # the session's default 48g driver heap lets G1 keep growing across the
+    # suite until a 15 GB test host's kernel OOM-kills the JVM (every later
+    # test then fails with ConnectionRefusedError); the suite's live data is
+    # small, so the test JVM gets a heap that fits the host
+    s = get_spark(
+        app_name="cdc-tests",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "6g"},
+    )
     yield s
 
 

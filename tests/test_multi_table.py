@@ -317,22 +317,3 @@ def test_multi_table_changes_export(spark, mt_log, tmp_path):
             (spec.keyspace, spec.table)
         }
 
-
-def test_arrow_decode_matches_jvm_per_spec(spark, mt_log):
-    """decode_table_payload_arrow (pandas UDF) is bit-identical to the JVM
-    from_json path for every table spec, including the timestamp payload."""
-    from debezium_connector_cassandra_spark.streaming.multi_table import (
-        decode_table_payload,
-        decode_table_payload_arrow,
-    )
-
-    raw = spark.read.parquet(mt_log)
-    for spec in SPECS:
-        sub = raw.where(
-            (F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table)
-        ).limit(300)
-        jvm = decode_table_payload(sub, spec).select("segment_id", "position", "cells")
-        arrow = decode_table_payload_arrow(sub, spec).select("segment_id", "position", "cells")
-        j = {(r["segment_id"], r["position"]): r["cells"] for r in jvm.collect()}
-        a = {(r["segment_id"], r["position"]): r["cells"] for r in arrow.collect()}
-        assert j == a, f"decode mismatch for {spec.fqtn}"
